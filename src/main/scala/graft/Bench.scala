@@ -26,13 +26,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     def newSession(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config(SparkEntry.NanosAsLongKey, "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+      val s = SparkEntry.sessionBuilder(cpus).getOrCreate()
       s.sparkContext.setLogLevel("WARN")
       s
     }
@@ -138,9 +132,14 @@ object Bench {
     // (BENCH_LATEST_c$cpus.json): the driver's low-core scaling run
     // re-invokes this main with a different $SPARK_GRAFT_CPUS and used
     // to overwrite the main-vector file, losing the full 32-core
-    // vector (r20: only a 34-query tail of the c32 run survived).
-    val cpusPath = outPath.stripSuffix(".json") + s"_c$cpus.json"
-    Seq(outPath, cpusPath).foreach { p =>
+    // vector (r20: only a 34-query tail of the c32 run survived). An
+    // SPARK_GRAFT_BENCH_OUT that already names the core count is
+    // written once.
+    val cpusSuffix = s"_c$cpus.json"
+    val cpusPath =
+      if (outPath.endsWith(cpusSuffix)) outPath
+      else outPath.stripSuffix(".json") + cpusSuffix
+    Seq(outPath, cpusPath).distinct.foreach { p =>
       try {
         val w = new java.io.PrintWriter(new java.io.File(p), "UTF-8")
         try w.println(line) finally w.close()

@@ -1,7 +1,8 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.Bridge
 import scala.collection.mutable.ArrayBuffer
+import scala.util.control.NonFatal
 
 /** Optimization-round measurement harness (guide §1): for each named
   * query, run once as warm-up, then run timed with a stage listener and
@@ -16,7 +17,8 @@ import scala.collection.mutable.ArrayBuffer
   * Env: SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_PLAN_DIR,
   * SPARK_GRAFT_PLAN_SUFFIX, SPARK_GRAFT_PROFILE_REPS (default 2; rep 2
   * — the first steady-state rep — is reported per stage, every rep's
-  * wall time prints).
+  * wall time prints). A query that fails in a timed rep is reported and
+  * the next query runs.
   */
 object Profile {
   def main(args: Array[String]): Unit = {
@@ -26,12 +28,7 @@ object Profile {
     val reps = sys.env.getOrElse("SPARK_GRAFT_PROFILE_REPS", "2").toInt
     val planDir = sys.env.get("SPARK_GRAFT_PLAN_DIR")
     val planSuffix = sys.env.getOrElse("SPARK_GRAFT_PLAN_SUFFIX", "")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(SparkEntry.NanosAsLongKey, "true")
-      .config("spark.ui.enabled", "false")
+    val builder = SparkEntry.sessionBuilder(cpus)
     // A/B experiment hook: "key=value;key=value" extra session confs
     sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(';')
       .map(_.trim).filter(_.contains('=')).foreach { kv =>
@@ -46,21 +43,12 @@ object Profile {
       // warm-up at the smallest SF so codegen/broadcast init is off-ledger
       if (new java.io.File(warmDir).isDirectory)
         try fn(spark, warmDir).write.mode("overwrite").format("noop").save()
-        catch { case scala.util.control.NonFatal(e) =>
+        catch { case NonFatal(e) =>
           // r20 ADVICE: a query broken at small scale should say so
           // here, not surface later as confusing timed numbers (and a
           // fatal error — OOM etc. — must not be swallowed at all)
           println(s"[profile] warm-up of $name failed: ${e.getMessage}")
         }
-      val df = fn(spark, sfDir)
-      planDir.foreach { d =>
-        new java.io.File(d).mkdirs()
-        val w = new java.io.PrintWriter(
-          new java.io.File(s"$d/$name$planSuffix.txt"), "UTF-8")
-        try w.println(df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
-        finally w.close()
-      }
       case class St(id: Int, nm: String, ms: Long, tasks: Int,
         shufReadMB: Double, shufWriteMB: Double, inRec: Long,
         outRows: Long, spillMB: Double)
@@ -82,21 +70,36 @@ object Profile {
         }
       }
       println(s"==== $name ====")
-      (1 to reps).foreach { r =>
-        // listener active for rep 2 ONLY (r20 ADVICE: with reps > 2 it
-        // used to aggregate stages from reps 2..N, contradicting the
-        // per-stage table's "one rep" doc)
-        if (r == 2) spark.sparkContext.addSparkListener(listener)
-        if (r == 3) { Thread.sleep(200)
-          spark.sparkContext.removeSparkListener(listener) }
+      def timedRep(r: Int): Unit = {
         System.gc()
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.mode("overwrite").format("noop").save()
         val dt = (System.nanoTime() - t0) / 1e9
         println(f"  rep$r%d wall: $dt%8.3f s")
       }
-      spark.sparkContext.removeSparkListener(listener)
-      Thread.sleep(200) // let stage-completed events drain
+      val sc = spark.sparkContext
+      try {
+        val df = fn(spark, sfDir)
+        planDir.foreach { d =>
+          new java.io.File(d).mkdirs()
+          val w = new java.io.PrintWriter(
+            new java.io.File(s"$d/$name$planSuffix.txt"), "UTF-8")
+          try w.println(df.queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode))
+          finally w.close()
+        }
+        // The listener sees rep 2 ONLY, and the bus is drained before it
+        // is removed so none of that rep's stage events are lost.
+        (1 to reps).foreach { r =>
+          if (r == 2) {
+            sc.addSparkListener(listener)
+            try timedRep(r)
+            finally { Bridge.waitUntilEmpty(sc); sc.removeSparkListener(listener) }
+          } else timedRep(r)
+        }
+      } catch { case NonFatal(e) =>
+        println(s"[profile] $name failed: ${e.getMessage}")
+      }
       println(
         "  stageId     ms tasks  shufRdMB  shufWrMB     inRec    wrRec  spillMB  name")
       stages.sortBy(-_.ms).take(25).foreach { s =>

@@ -389,9 +389,9 @@ private[graft] object QueriesText {
     },
     "pipeline_flagship" -> { (s, dir) =>
       // the end-to-end composition the README promises — the chain
-      // itself lives in graft.pipeline.Flagship (shared verbatim with
-      // the ScaleBench growth cell, so the thing measured at scale IS
-      // the thing this oracle checks). Every stage is individually
+      // itself lives in graft.pipeline.Flagship (the chain whose growth
+      // SURVEY §8 records, so the thing measured at scale IS the thing
+      // this oracle checks). Every stage is individually
       // oracle-pinned; THIS row pins the seams (schema handoffs, NULL
       // discipline, id/meta survival across stages). Fixture plumbing:
       // docs < 50 re-crawl under new crawl ids with the same page id

@@ -18,12 +18,23 @@ object SparkEntry {
 
   /** Conf that lets Spark's parquet reader surface TIMESTAMP(NANOS)
     * columns (which it cannot model — micros only) as raw long nanos
-    * instead of failing. Session-builder-scoped: [[Verify]]/[[Bench]] and
-    * the test harness set it in their builders. [[table]] does NOT
+    * instead of failing. Session-builder-scoped: [[sessionBuilder]] sets
+    * it for every entry point and the test harness. [[table]] does NOT
     * mutate the session (an unscoped `conf.set` inside a loader is racy
     * under concurrent queries); a session that reads the nanos fixtures
     * (`events`) must carry this conf from construction. */
   val NanosAsLongKey = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** The session every entry point builds: `local[cpus]` with `cpus`
+    * shuffle partitions, UTC session time, [[NanosAsLongKey]] on and the
+    * UI off. Callers add their own settings before `getOrCreate()`. */
+  def sessionBuilder(cpus: String): SparkSession.Builder =
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config(NanosAsLongKey, "true")
+      .config("spark.ui.enabled", "false")
 
   /** Fixture loader. Nanos timestamp columns (the events fixture's `ts`)
     * surface as LongType under [[NanosAsLongKey]]; they are converted to

@@ -5,71 +5,90 @@ import graft.sources.DataStore
 import graft.ops.Ops
 
 /** Persistent incrementally-maintained rollup — [[IncrementalIndex]]'s
-  * sibling for AGGREGATES: the stored object is an
-  * [[graft.ops.Ops.aggregateState]] frame (per-group sufficient
-  * statistics, |groups| rows however much history has flowed through),
+  * sibling for AGGREGATES: the stored object is a mergeable per-group
+  * state frame (|groups| rows however much history has flowed through),
   * each batch folds in with one |groups|-sized merge, and the
   * presentation rollup projects out on demand. History is read ONCE —
   * when it was a batch; a 100 TB event archive maintains a KB-scale
-  * state table.
+  * state table. The five kinds below differ only in the
+  * [[graft.ops.Ops]] summarize/merge pair they bind and in their
+  * `result` projection; create, load and fold are written here once.
   *
-  * The fold pins the merged state (localCheckpoint) BEFORE replacing
+  * The fold pins the merged state (a local checkpoint) BEFORE replacing
   * the stored object — the merge plan reads that object, and a lazy
   * replace would otherwise overwrite its own input mid-read (the same
   * discipline as [[IncrementalIndex.ingest]]).
   *
-  * `count_distinct` has no bounded exact state; keep a sibling
-  * HLL-sketch state (`Ops.aggregateStateHll` + `mergeAggregateStatesHll`
-  * under its own object name) when estimated distincts are wanted.
-  */
-final case class RollupState(
-    store: DataStore, name: String,
-    keys: Seq[String], measures: Seq[(String, String)]) {
+  * At-least-once caveat: a fold is not keyed by batch, so a batch
+  * folded twice (a `foreachBatch` restart re-delivers the last
+  * micro-batch) is merged twice. Each kind notes whether that changes
+  * its state; where it does, production restarts need an idempotence
+  * key (batchId recorded with the state) or an upstream exactly-once
+  * source. */
+sealed trait MergeableState {
+  def store: DataStore
+  def name: String
+
+  /** The state frame of one batch. */
+  protected def summarize(df: DataFrame): DataFrame
+
+  /** Two state frames of this kind merged into one. */
+  protected def merge(stored: DataFrame, batch: DataFrame): DataFrame
 
   /** Initialize (or replace) the state from a first batch. */
   def create(df: DataFrame, replace: Boolean = false): Unit =
-    store.create(name, Ops.aggregateState(keys, measures)(df), replace)
+    store.create(name, summarize(df), replace)
 
-  /** The stored sufficient-statistics frame. */
+  /** The stored state frame. */
   def load(): DataFrame = store.getObject(name)
 
-  /** Fold one batch into the stored state: aggregate the BATCH (its
-    * only scan), merge with the |groups|-row stored frame, replace. */
+  /** Fold one batch into the stored state: summarize the BATCH (its
+    * only scan), merge with the |groups|-row stored frame, pin, replace. */
   def fold(batch: DataFrame): Unit = {
-    val merged = Ops.mergeAggregateStates(keys, measures)(
-      load(), Ops.aggregateState(keys, measures)(batch))
-      .localCheckpoint()
+    val merged = merge(load(), summarize(batch)).localCheckpoint()
     store.create(name, merged, replace = true)
   }
+}
+
+/** Additive measures: the stored object is an
+  * [[graft.ops.Ops.aggregateState]] frame (per-group sufficient
+  * statistics). A replayed batch double-counts.
+  *
+  * `count_distinct` has no bounded exact state; keep a sibling
+  * [[RollupStateHll]] under its own object name when estimated
+  * distincts are wanted. */
+final case class RollupState(
+    store: DataStore, name: String,
+    keys: Seq[String], measures: Seq[(String, String)])
+    extends MergeableState {
+
+  protected def summarize(df: DataFrame): DataFrame =
+    Ops.aggregateState(keys, measures)(df)
+
+  protected def merge(stored: DataFrame, batch: DataFrame): DataFrame =
+    Ops.mergeAggregateStates(keys, measures)(stored, batch)
 
   /** The presentation rollup — [[graft.ops.Ops.aggregate]]'s schema —
     * from the current state. */
   def result(): DataFrame = Ops.finalizeAggregate(keys, measures)(load())
 }
 
-/** [[RollupState]]'s sibling for DISTINCT counts: the stored object is
-  * an [[graft.ops.Ops.aggregateStateHll]] frame (one ~1.5 KB
-  * DataSketches HLL sketch per (group, field) FOREVER), batches fold
-  * in with a register-wise union, and [[result]] projects the
-  * estimates. Keep it under its own object name next to the exact
-  * measure state — the two compose into one dashboard query with a
-  * keys join. Same fold discipline (pin before replace) and the same
-  * at-least-once restart caveat as the measure form. */
+/** DISTINCT counts: the stored object is an
+  * [[graft.ops.Ops.aggregateStateHll]] frame (one ~1.5 KB DataSketches
+  * HLL sketch per (group, field) FOREVER), batches fold in with a
+  * register-wise union. Keep it under its own object name next to the
+  * exact measure state — the two compose into one dashboard query with
+  * a keys join. A replayed batch changes nothing (a max of maxes). */
 final case class RollupStateHll(
     store: DataStore, name: String,
-    keys: Seq[String], fields: Seq[String], lgK: Int = 12) {
+    keys: Seq[String], fields: Seq[String], lgK: Int = 12)
+    extends MergeableState {
 
-  def create(df: DataFrame, replace: Boolean = false): Unit =
-    store.create(name, Ops.aggregateStateHll(keys, fields, lgK)(df), replace)
+  protected def summarize(df: DataFrame): DataFrame =
+    Ops.aggregateStateHll(keys, fields, lgK)(df)
 
-  def load(): DataFrame = store.getObject(name)
-
-  def fold(batch: DataFrame): Unit = {
-    val merged = Ops.mergeAggregateStatesHll(keys, fields)(
-      load(), Ops.aggregateStateHll(keys, fields, lgK)(batch))
-      .localCheckpoint()
-    store.create(name, merged, replace = true)
-  }
+  protected def merge(stored: DataFrame, batch: DataFrame): DataFrame =
+    Ops.mergeAggregateStatesHll(keys, fields)(stored, batch)
 
   /** `(keys…, <field>_distinct_est…)` from the current sketches. */
   def result(): DataFrame = Ops.finalizeAggregateHll(keys, fields)(load())
@@ -81,27 +100,19 @@ final case class RollupStateHll(
   * the persisted sketches answer intersection/difference questions
   * across groups or across separately-maintained states
   * ([[graft.functions.GraftFunctions.thetaIntersect]] / `thetaDiff`) —
-  * the overlap/churn queries HLL state cannot. Theta unions are
-  * IDEMPOTENT under re-delivery (a set union of hash sets), so the
-  * at-least-once restart caveat vanishes here, as with HLL. Exact and
-  * deterministic while each group stays under `nominalEntries`
-  * distincts. */
+  * the overlap/churn queries HLL state cannot. Exact and deterministic
+  * while each group stays under `nominalEntries` distincts. A replayed
+  * batch changes nothing (a set union of hash sets). */
 final case class RollupStateTheta(
     store: DataStore, name: String,
-    keys: Seq[String], fields: Seq[String], nominalEntries: Int = 4096) {
+    keys: Seq[String], fields: Seq[String], nominalEntries: Int = 4096)
+    extends MergeableState {
 
-  def create(df: DataFrame, replace: Boolean = false): Unit =
-    store.create(name,
-      Ops.aggregateStateTheta(keys, fields, nominalEntries)(df), replace)
+  protected def summarize(df: DataFrame): DataFrame =
+    Ops.aggregateStateTheta(keys, fields, nominalEntries)(df)
 
-  def load(): DataFrame = store.getObject(name)
-
-  def fold(batch: DataFrame): Unit = {
-    val merged = Ops.mergeAggregateStatesTheta(keys, fields, nominalEntries)(
-      load(), Ops.aggregateStateTheta(keys, fields, nominalEntries)(batch))
-      .localCheckpoint()
-    store.create(name, merged, replace = true)
-  }
+  protected def merge(stored: DataFrame, batch: DataFrame): DataFrame =
+    Ops.mergeAggregateStatesTheta(keys, fields, nominalEntries)(stored, batch)
 
   /** `(keys…, <field>_distinct_est…)` from the current sketches. */
   def result(): DataFrame = Ops.finalizeAggregateTheta(keys, fields)(load())
@@ -114,25 +125,17 @@ final case class RollupStateTheta(
   * Exact order statistics while a group has seen ≤ k values (the
   * oracle's regime); the ~1.65% rank-error band — and, unlike HLL,
   * NON-rerun-identical estimates from the compactor's random coin —
-  * beyond. Same fold discipline (pin before replace); KLL merges are
-  * NOT idempotent under re-delivery (re-merging the same batch
-  * double-counts its values' ranks), so the at-least-once restart
-  * caveat of the additive form applies here too. */
+  * beyond. A replayed batch double-counts its values' ranks. */
 final case class RollupStateKll(
     store: DataStore, name: String,
-    keys: Seq[String], fields: Seq[String], k: Int = 200) {
+    keys: Seq[String], fields: Seq[String], k: Int = 200)
+    extends MergeableState {
 
-  def create(df: DataFrame, replace: Boolean = false): Unit =
-    store.create(name, Ops.aggregateStateKll(keys, fields, k)(df), replace)
+  protected def summarize(df: DataFrame): DataFrame =
+    Ops.aggregateStateKll(keys, fields, k)(df)
 
-  def load(): DataFrame = store.getObject(name)
-
-  def fold(batch: DataFrame): Unit = {
-    val merged = Ops.mergeAggregateStatesKll(keys, fields, k)(
-      load(), Ops.aggregateStateKll(keys, fields, k)(batch))
-      .localCheckpoint()
-    store.create(name, merged, replace = true)
-  }
+  protected def merge(stored: DataFrame, batch: DataFrame): DataFrame =
+    Ops.mergeAggregateStatesKll(keys, fields, k)(stored, batch)
 
   /** `(keys…, <field>_p<rank>…)` from the current sketches. */
   def result(ranks: Seq[Double]): DataFrame =
@@ -147,27 +150,19 @@ final case class RollupStateKll(
   * has THIS value occurred across all history" without re-reading
   * history or knowing the key at build time. Estimates never
   * undercount; exact and deterministic in the collision-free regime
-  * (the oracle's — see [[graft.functions.CmsAgg]]). Same fold
-  * discipline (pin before replace); CMS merges are NOT idempotent
-  * under re-delivery (counters add), so the at-least-once restart
-  * caveat of the additive form applies here too. */
+  * (the oracle's — see [[graft.functions.CmsAgg]]). A replayed batch
+  * double-counts (counters add). */
 final case class RollupStateCms(
     store: DataStore, name: String,
     keys: Seq[String], fields: Seq[String],
-    depth: Int = 5, width: Int = 4096, seed: Int = 1) {
+    depth: Int = 5, width: Int = 4096, seed: Int = 1)
+    extends MergeableState {
 
-  def create(df: DataFrame, replace: Boolean = false): Unit =
-    store.create(name,
-      Ops.aggregateStateCms(keys, fields, depth, width, seed)(df), replace)
+  protected def summarize(df: DataFrame): DataFrame =
+    Ops.aggregateStateCms(keys, fields, depth, width, seed)(df)
 
-  def load(): DataFrame = store.getObject(name)
-
-  def fold(batch: DataFrame): Unit = {
-    val merged = Ops.mergeAggregateStatesCms(keys, fields, depth, width, seed)(
-      load(), Ops.aggregateStateCms(keys, fields, depth, width, seed)(batch))
-      .localCheckpoint()
-    store.create(name, merged, replace = true)
-  }
+  protected def merge(stored: DataFrame, batch: DataFrame): DataFrame =
+    Ops.mergeAggregateStatesCms(keys, fields, depth, width, seed)(stored, batch)
 
   /** `(keys…, item, <field>_freq_est)` for a static probe list. */
   def result(field: String, items: Seq[String]): DataFrame =

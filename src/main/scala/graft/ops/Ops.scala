@@ -322,6 +322,22 @@ object Ops {
       case (f, fn) => col(s"${f}_$fn")
     } :+ col(countField): _*)
 
+  /** The per-field state shape the four sketch legs (HLL, theta, KLL,
+    * CMS) share: `frames` unioned by name and grouped by `keys`, one
+    * `<f>_<suffix>` column per distinct field holding `agg` of the field
+    * itself — or, when merging state frames, of the stored
+    * `<f>_<suffix>` column. */
+  private def perFieldState(
+      keys: Seq[String], fields: Seq[String], suffix: String,
+      merge: Boolean)(agg: Column => Column)(frames: DataFrame*): DataFrame = {
+    val aggs = fields.distinct.map { f =>
+      val out = s"${f}_$suffix"
+      agg(col(if (merge) out else f)).as(out)
+    }
+    frames.reduce(_ unionByName _)
+      .groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
+  }
+
   /** The DISTINCT-count leg [[aggregateState]] refuses: per-group
     * DataSketches HLL sketches (Spark's native `hll_sketch_agg`) as the
     * mergeable state — ~1.5 KB per (group, field) at `lgK = 12`
@@ -339,21 +355,17 @@ object Ops {
       df: DataFrame): DataFrame = {
     require(keys.nonEmpty, "at least one grouping key required")
     require(fields.nonEmpty, "at least one sketched field required")
-    val aggs = fields.distinct.map(f =>
-      hll_sketch_agg(col(f), lit(lgK)).as(s"${f}_hll"))
-    df.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
+    perFieldState(keys, fields, "hll", merge = false)(
+      hll_sketch_agg(_, lit(lgK)))(df)
   }
 
   /** Fold one [[aggregateStateHll]] frame into another: union + one
     * register-wise `hll_union_agg` per sketch column. */
   def mergeAggregateStatesHll(
       keys: Seq[String], fields: Seq[String])(
-      stored: DataFrame, batch: DataFrame): DataFrame = {
-    val merges = fields.distinct.map(f =>
-      hll_union_agg(col(s"${f}_hll")).as(s"${f}_hll"))
-    stored.unionByName(batch)
-      .groupBy(keys.map(col): _*).agg(merges.head, merges.tail: _*)
-  }
+      stored: DataFrame, batch: DataFrame): DataFrame =
+    perFieldState(keys, fields, "hll", merge = true)(
+      hll_union_agg(_))(stored, batch)
 
   /** Estimate distinct counts from an [[aggregateStateHll]] frame:
     * `<f>_distinct_est` BIGINT per sketched field. */
@@ -376,10 +388,8 @@ object Ops {
       nominalEntries: Int = 4096)(df: DataFrame): DataFrame = {
     require(keys.nonEmpty, "at least one grouping key required")
     require(fields.nonEmpty, "at least one sketched field required")
-    val aggs = fields.distinct.map(f =>
-      graft.functions.GraftFunctions
-        .thetaAgg(col(f), nominalEntries).as(s"${f}_theta"))
-    df.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
+    perFieldState(keys, fields, "theta", merge = false)(
+      graft.functions.GraftFunctions.thetaAgg(_, nominalEntries))(df)
   }
 
   /** Fold one [[aggregateStateTheta]] frame into another: union + one
@@ -387,13 +397,10 @@ object Ops {
   def mergeAggregateStatesTheta(
       keys: Seq[String], fields: Seq[String],
       nominalEntries: Int = 4096)(
-      stored: DataFrame, batch: DataFrame): DataFrame = {
-    val merges = fields.distinct.map(f =>
-      graft.functions.GraftFunctions
-        .thetaUnion(col(s"${f}_theta"), nominalEntries).as(s"${f}_theta"))
-    stored.unionByName(batch)
-      .groupBy(keys.map(col): _*).agg(merges.head, merges.tail: _*)
-  }
+      stored: DataFrame, batch: DataFrame): DataFrame =
+    perFieldState(keys, fields, "theta", merge = true)(
+      graft.functions.GraftFunctions.thetaUnion(_, nominalEntries))(
+      stored, batch)
 
   /** Distinct estimates from an [[aggregateStateTheta]] frame:
     * `<f>_distinct_est` BIGINT per field. */
@@ -422,10 +429,8 @@ object Ops {
       df: DataFrame): DataFrame = {
     require(keys.nonEmpty, "at least one grouping key required")
     require(fields.nonEmpty, "at least one sketched field required")
-    val aggs = fields.distinct.map(f =>
-      graft.functions.GraftFunctions
-        .kllAgg(col(f).cast("double"), k).as(s"${f}_kll"))
-    df.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
+    perFieldState(keys, fields, "kll", merge = false)(c =>
+      graft.functions.GraftFunctions.kllAgg(c.cast("double"), k))(df)
   }
 
   /** Fold one [[aggregateStateKll]] frame into another: union + one
@@ -433,13 +438,9 @@ object Ops {
     * total stays ≤ k is itself exact. */
   def mergeAggregateStatesKll(
       keys: Seq[String], fields: Seq[String], k: Int = 200)(
-      stored: DataFrame, batch: DataFrame): DataFrame = {
-    val merges = fields.distinct.map(f =>
-      graft.functions.GraftFunctions
-        .kllMerge(col(s"${f}_kll"), k).as(s"${f}_kll"))
-    stored.unionByName(batch)
-      .groupBy(keys.map(col): _*).agg(merges.head, merges.tail: _*)
-  }
+      stored: DataFrame, batch: DataFrame): DataFrame =
+    perFieldState(keys, fields, "kll", merge = true)(
+      graft.functions.GraftFunctions.kllMerge(_, k))(stored, batch)
 
   /** Project quantiles from an [[aggregateStateKll]] frame:
     * `<f>_p<pct>` DOUBLE per (field, rank) — e.g. rank 0.5 → `<f>_p50`.
@@ -482,10 +483,8 @@ object Ops {
       df: DataFrame): DataFrame = {
     require(keys.nonEmpty, "at least one grouping key required")
     require(fields.nonEmpty, "at least one sketched field required")
-    val aggs = fields.distinct.map(f =>
-      graft.functions.GraftFunctions
-        .cmsAgg(col(f), depth, width, seed).as(s"${f}_cms"))
-    df.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
+    perFieldState(keys, fields, "cms", merge = false)(
+      graft.functions.GraftFunctions.cmsAgg(_, depth, width, seed))(df)
   }
 
   /** Fold one [[aggregateStateCms]] frame into another: union + one
@@ -495,13 +494,10 @@ object Ops {
   def mergeAggregateStatesCms(
       keys: Seq[String], fields: Seq[String],
       depth: Int = 5, width: Int = 4096, seed: Int = 1)(
-      stored: DataFrame, batch: DataFrame): DataFrame = {
-    val merges = fields.distinct.map(f =>
-      graft.functions.GraftFunctions
-        .cmsMerge(col(s"${f}_cms"), depth, width, seed).as(s"${f}_cms"))
-    stored.unionByName(batch)
-      .groupBy(keys.map(col): _*).agg(merges.head, merges.tail: _*)
-  }
+      stored: DataFrame, batch: DataFrame): DataFrame =
+    perFieldState(keys, fields, "cms", merge = true)(
+      graft.functions.GraftFunctions.cmsMerge(_, depth, width, seed))(
+      stored, batch)
 
   /** Probe an [[aggregateStateCms]] frame for a fixed key list: one
     * output row per (group, probe key) — `(keys…, item, <f>_freq_est)`,

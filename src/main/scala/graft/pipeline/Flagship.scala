@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 import graft.ext.{Dedup, TextOps}
 
 /** The flagship end-to-end composition as a reusable chain — ONE
-  * function shared by the `pipeline_flagship` oracle row and the
-  * ScaleBench growth cell, so the thing measured at scale IS the thing
-  * the oracle checks: htmlExtract → NFC normalize → gopher gate →
+  * function behind the `pipeline_flagship` oracle row and the growth
+  * measurements in SURVEY §8, so the thing measured at scale IS the
+  * thing the oracle checks: htmlExtract → NFC normalize → gopher gate →
   * corpus-wide line dedup → incremental fingerprint dedup against a
   * crawl-N index → temperature mix → per-language sequence packing,
   * every step through the EP1 [[Pipeline]] façade.
@@ -23,8 +23,8 @@ import graft.ext.{Dedup, TextOps}
   * Scale shape: each fan-out stage (cleaned/lined/deduped feed two
   * consumers each) is localCheckpointed so the chain computes every
   * stage exactly once; all stages are the individually-benchmarked
-  * operators — the ScaleBench cell pins that their COMPOSITION stays
-  * linear under corpus growth too (seams add joins, not new shuffles
+  * operators — SURVEY §8 records that their COMPOSITION stays linear
+  * under corpus growth too (seams add joins, not new shuffles
   * per row). */
 object Flagship {
 

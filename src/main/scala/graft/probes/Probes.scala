@@ -3465,7 +3465,7 @@ object Probes {
     // REVERSED order — the same row set and the same exact doubles as
     // a (currentRow, unboundedFollowing) frame, but Spark executes
     // that frame class by rescanning the remainder per row (O(m²) in
-    // one task — the r17 ScaleBench cell caught it at 100k tests);
+    // one task — caught at 100k tests, SURVEY §8);
     // the reversed running frame is the streaming O(m) evaluator.
     // Reversal rides the COMPUTED rank, not (p, id) desc: rank is a
     // total order by construction, so the prefix-in-reverse is the

@@ -435,74 +435,17 @@ object Streaming {
         graft.ext.Conversations.assembledColumns(lossRole): _*)
   }
 
-  /** Continuous rollup maintenance: attach a
-    * [[graft.ext.RollupState]] to an unbounded stream — each
-    * micro-batch folds into the persisted sufficient-statistics frame
-    * via `foreachBatch` (the canonical stream-to-maintained-table
-    * shape: the aggregation itself is batch code, so batch and
-    * streaming rollups CANNOT disagree). Exactly-once caveat,
-    * documented rather than hidden: `foreachBatch` gives at-least-once
-    * on restart — a re-delivered batch would double-count, so
-    * production restarts need an idempotence key (batchId recorded
-    * with the state) or an upstream exactly-once source; the dedup
-    * triad's append-survivors loops carry the same contract. Returns
-    * the started query. */
+  /** Continuous rollup maintenance: attach a persisted
+    * [[graft.ext.MergeableState]] (any of the five `RollupState*`
+    * kinds) to an unbounded stream — each micro-batch folds into the
+    * stored state via `foreachBatch` (the canonical
+    * stream-to-maintained-table shape: the aggregation itself is batch
+    * code, so batch and streaming rollups CANNOT disagree).
+    * `foreachBatch` gives at-least-once on restart; see
+    * [[graft.ext.MergeableState]] for which kinds a re-delivered batch
+    * changes. Returns the started query. */
   def streamingRollup(
-      events: DataFrame, state: graft.ext.RollupState):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) => state.fold(batch) }
-      .start()
-
-  /** [[streamingRollup]]'s distinct-count sibling: fold each
-    * micro-batch's HLL sketches into a persisted
-    * [[graft.ext.RollupStateHll]]. Same foreachBatch shape, same
-    * at-least-once caveat — though HLL unions are IDEMPOTENT under
-    * re-delivery of the same rows (a max of maxes), so a replayed batch
-    * distorts nothing here, unlike the additive measure form. */
-  def streamingRollupHll(
-      events: DataFrame, state: graft.ext.RollupStateHll):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) => state.fold(batch) }
-      .start()
-
-  /** [[streamingRollup]]'s SET-ALGEBRA sibling: fold each micro-batch's
-    * theta sketches into a persisted [[graft.ext.RollupStateTheta]].
-    * Theta unions are idempotent under re-delivery (set union), so the
-    * at-least-once caveat vanishes here, as with HLL. */
-  def streamingRollupTheta(
-      events: DataFrame, state: graft.ext.RollupStateTheta):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) => state.fold(batch) }
-      .start()
-
-  /** [[streamingRollup]]'s QUANTILE sibling: fold each micro-batch's
-    * KLL sketches into a persisted [[graft.ext.RollupStateKll]]. Same
-    * foreachBatch shape. NOTE the at-least-once caveat BINDS here as it
-    * does for the additive form (and unlike HLL): a re-delivered batch
-    * re-merges its values and shifts every rank estimate — production
-    * restarts need an idempotence key recorded with the state. */
-  def streamingRollupKll(
-      events: DataFrame, state: graft.ext.RollupStateKll):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) => state.fold(batch) }
-      .start()
-
-  /** [[streamingRollup]]'s POINT-FREQUENCY sibling: fold each
-    * micro-batch's count–min sketches into a persisted
-    * [[graft.ext.RollupStateCms]]. Same foreachBatch shape. The
-    * at-least-once caveat BINDS (counters add — a re-delivered batch
-    * double-counts): production restarts need an idempotence key
-    * recorded with the state, as for the additive and KLL forms. */
-  def streamingRollupCms(
-      events: DataFrame, state: graft.ext.RollupStateCms):
+      events: DataFrame, state: graft.ext.MergeableState):
       org.apache.spark.sql.streaming.StreamingQuery =
     events.writeStream
       .outputMode("append")
@@ -2288,8 +2231,8 @@ object Streaming {
     * per-query state. The micro-batch boundary IS the serving unit —
     * each batch is a bounded query set, the exact shape the batch
     * operator is built for. At-least-once on restart (a replayed batch
-    * re-serves its answers — harmless for idempotent sinks, the
-    * [[streamingRollupHll]] caveat class). */
+    * re-serves its answers — harmless for idempotent sinks, as for
+    * [[graft.ext.RollupStateHll]]). */
   def streamingIvfPqServe(
       queries: DataFrame,
       queryId: String, queryVec: String,

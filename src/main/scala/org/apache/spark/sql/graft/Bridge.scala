@@ -1,20 +1,24 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.classic.ExpressionUtils
 
-/** Bridge into Spark's `private[sql]` Column ↔ Expression converters and
-  * the session function registry — the standard pattern for libraries
-  * shipping native Catalyst expressions (the converters are public in
-  * bytecode but `private[sql]` to Scala, so this object lives under the
-  * `org.apache.spark.sql` package namespace). Kept to three one-liners;
-  * all graft logic stays in the `graft.*` packages. */
+/** Bridge into Spark's `private[sql]` Column ↔ Expression converters,
+  * the session function registry and the listener bus — the standard
+  * pattern for libraries shipping native Catalyst expressions (the
+  * converters are public in bytecode but `private[sql]` to Scala, so this
+  * object lives under the `org.apache.spark.sql` package namespace). Kept
+  * to one-liners; all graft logic stays in the `graft.*` packages. */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
 
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** Block until every event posted so far has reached every listener. */
+  def waitUntilEmpty(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 
   def registerFunction(
       spark: SparkSession,

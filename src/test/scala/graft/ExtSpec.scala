@@ -1923,7 +1923,7 @@ class ExtSpec extends SparkSpec {
   }
 
   test("bpeTokenCount at production vocabulary scale: 50k-merge table, same counts") {
-    // The vocab-size-independence claim behind the ScaleBench cell:
+    // The vocab-size-independence claim behind SURVEY §8's scale note:
     // the same 10 firing ranks buried under ~50k junk merges (CJK
     // single-codepoint operands that never occur in the text) must
     // produce IDENTICAL counts — rank lookups are hash-map hits, not
